@@ -2,13 +2,25 @@
 
 The canonical pre-training data flow over a raw document corpus:
 
-    quality filter  ->  exact dedup  ->  near-dup removal
+    [line filter ->] [paragraph dedup ->] [span dedup ->]
+    quality filter [+ repetition rules] -> exact dedup -> near-dup removal
+    [-> decontamination] [-> per-domain quality prune] [-> semantic dedup]
 
-composed from the engine's own tiers (functions/text.py quality exprs,
-hash-group exact dedup, inverted-index n-gram Jaccard — swap in
-minhash_lsh_candidates as the candidate generator at 100 TB). Every
-stage keeps its drop set, so the pipeline reports WHAT it removed and
-why — the property a production data pipeline is audited on.
+Each stage is written once, in the ``_*_stage`` functions below, and
+three drivers call them in that order: corpus_clean (the core stages
+over a corpus), workflows.pretraining_pipeline (every stage, plus the
+URL, DSIR, mixing and curriculum steps) and
+streaming/pipeline.incremental_corpus_clean (one ingest batch against
+persisted state). A stage takes its state — None in a batch run — and
+returns its survivors, its drop frame (doc_id) and, where it keeps
+state, the delta to append; a batch driver ignores the delta. Each stage
+places the one lazy localCheckpoint its fan-out node needs (its
+survivors and its drop frame are separate consumers), so no driver
+caches anything itself. The declared differences between the batch and
+the incremental form are stage arguments: exact dedup keys on the full
+text or on xxhash64(text), the prune applies fitted or pinned
+thresholds, semantic dedup derives or pins its SRP grid, and DSIR is a
+top-k or a gate.
 
 Determinism: survivors of an exact-dup group = min doc_id; of a near-dup
 pair = the smaller doc_id (greedy on the pair list; pairs are symmetric
@@ -23,7 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_cookbook_spark.functions.text import quality_exprs
-from bigdata_cookbook_spark.operators.dedup import ngram_jaccard_pairs
+from bigdata_cookbook_spark.operators.dedup import (
+    _jaccard_verify,
+    _jaccard_vs_index,
+    _shingle_index,
+    incremental_lsh_candidates,
+    ngram_jaccard_pairs,
+)
 from bigdata_cookbook_spark.sources.testdata import spread_for_cpu_bound
 
 
@@ -47,8 +65,7 @@ def corpus_clean(
     """Returns {kept, dropped_quality, dropped_exact, dropped_neardup}
     (+ dropped_contaminated AND pre_contamination_kept when ``eval_df``
     is given — the latter is NOT a drop bucket: it is the
-    pre-decontamination survivor set, exposed so accounting callers can
-    persist the shared prefix; see workflows.pretraining_pipeline).
+    pre-decontamination survivor set).
 
     ``repetition_filter=True`` additionally applies the Gopher n-gram
     repetition rules (functions/text.repetition_metrics_exprs) inside
@@ -79,17 +96,15 @@ def corpus_clean(
     of a <=2 MiB filter instead of entering the full shingle join; the
     100 TB default when eval_df is benchmark-sized.
 
-    ``near_dup`` picks the near-dup tier (the batch twin of
-    streaming/pipeline's option, closing the one asymmetry between the
-    two pipelines):
+    ``near_dup`` picks the near-dup tier (the same option as the
+    incremental pipeline's):
 
     - ``"exact"`` (default, the oracle tier): the full inverted-index
       Jaccard self-join (dedup.ngram_jaccard_pairs), optionally
       df-capped — every qualifying pair is found.
     - ``"lsh"``: the 100 TB funnel — MinHash band buckets generate
-      candidate pairs (dedup.minhash_lsh_candidates at
-      ``lsh_num_hashes``/``lsh_band_size``), exact Jaccard verifies
-      ONLY the candidates (dedup.jaccard_verify_pairs: cost bounded by
+      candidate pairs at ``lsh_num_hashes``/``lsh_band_size``, exact
+      Jaccard verifies ONLY the candidates (cost bounded by
       |candidates| x shingles/doc, never the self-join's sum(df^2)).
       The drop set is a SUBSET of the exact tier's (banding recall
       < 1 is the documented trade; verification guarantees no false
@@ -103,10 +118,120 @@ def corpus_clean(
       largest marginal stage (105.6 s of 587 — BASELINE.md §J); this
       tier is the production answer.
     """
-    # round 11: spread the scan for the quality battery (token split +
-    # stopword fold per document; conditional — a no-op at cluster
-    # scale where file splits provide the parallelism)
-    docs = spread_for_cpu_bound(docs)
+    # round 11: spread the scan for the quality battery (a no-op at
+    # cluster scale, where file splits provide the parallelism)
+    passed, dropped_quality = _quality_stage(
+        spread_for_cpu_bound(docs), lang, min_tokens, max_stopword_ratio, repetition_filter
+    )
+    exact_kept, dropped_exact, _ = _exact_dedup_stage(passed)
+    kept, dropped_neardup, _ = _near_dup_stage(
+        exact_kept,
+        near_dup,
+        jaccard_threshold,
+        df_cap=jaccard_df_cap,
+        num_hashes=lsh_num_hashes,
+        band_size=lsh_band_size,
+    )
+    out = {
+        "dropped_quality": dropped_quality,
+        "dropped_exact": dropped_exact,
+        "dropped_neardup": dropped_neardup,
+    }
+    if eval_df is not None:
+        out["pre_contamination_kept"] = kept
+        kept, out["dropped_contaminated"] = _decontaminate_stage(
+            kept, eval_df, contamination_n, contamination_threshold, broadcast_eval,
+            bloom_decontaminate,
+        )
+    out["kept"] = kept.select("doc_id", "lang", "source", "n_tokens")
+    return out
+
+
+def _split(staged: DataFrame, keep) -> tuple[DataFrame, DataFrame]:
+    """Materialize ``staged`` once and split it on the ``keep`` column
+    expression: (rows where it holds, doc_ids where it fails). A row
+    whose ``keep`` is NULL lands in neither."""
+    staged = staged.localCheckpoint(eager=False)
+    return staged.filter(keep), staged.filter(~keep).select("doc_id")
+
+
+def _line_filter_stage(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """RefinedWeb line-wise corrections (functions/text.line_filter_exprs):
+    kept docs carry the line-cleaned text, and a doc whose kept text
+    falls under half the original drops whole. Stateless."""
+    from bigdata_cookbook_spark.functions.text import line_filter_exprs
+
+    lf = line_filter_exprs(F.col("text"))
+    kept, dropped = _split(
+        docs.select(
+            "doc_id",
+            lf["text_clean"].alias("__clean"),
+            lf["doc_keep"].alias("__keep"),
+            "lang",
+            "source",
+        ),
+        F.col("__keep"),
+    )
+    return kept.select("doc_id", F.col("__clean").alias("text"), "lang", "source"), dropped
+
+
+def _paragraph_stage(
+    docs: DataFrame, sep: str, state: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Corpus-wide paragraph dedup: paragraph_dedup_incremental against
+    ``state``, every paragraph kept so far (with no state this is
+    paragraph_dedup). Returns (docs with rewritten text, new_paras)."""
+    res = paragraph_dedup_incremental(docs, state, sep=sep)
+    return _rewrite_text(docs, res["rewritten"]), res["new_paras"]
+
+
+def _span_stage(
+    docs: DataFrame, span_tokens: int, state: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """C4-style duplicate-span removal: span_dedup_incremental against
+    ``state``, every span kept so far (with no state this is
+    span_dedup). Returns (docs with rewritten text, new_spans)."""
+    res = span_dedup_incremental(docs, state, span_tokens=span_tokens)
+    return _rewrite_text(docs, res["rewritten"]), res["new_spans"]
+
+
+def _rewrite_text(docs: DataFrame, rewritten: DataFrame) -> DataFrame:
+    """``docs`` with each text replaced by its ``text_deduped`` rewrite.
+    Left join + coalesce: a doc the rewrite emptied, or emitted no row
+    for (blank on arrival), carries '' into the quality stage, which
+    drops and books it; an inner join would lose it silently.
+    Materialized: a following rewrite stage reads it twice (its explode
+    and its join-back), and pretraining_pipeline reads the final text
+    again for DSIR and shard sizing."""
+    return (
+        docs.drop("text")
+        .join(
+            rewritten.select("doc_id", F.col("text_deduped").alias("text")),
+            "doc_id",
+            "left",
+        )
+        .select("doc_id", F.coalesce("text", F.lit("")).alias("text"), "lang", "source")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _quality_stage(
+    docs: DataFrame,
+    lang: str,
+    min_tokens: int,
+    max_stopword_ratio: float,
+    repetition_filter: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """Language, length and stopword-ratio gate (functions/text.
+    quality_exprs), plus the Gopher repetition rules with
+    ``repetition_filter``; both drop into one frame. Survivors carry
+    n_tokens and stopword_ratio. Stateless."""
+    if repetition_filter and min_tokens < 10:
+        raise ValueError(
+            "repetition_filter requires min_tokens >= 10 (the "
+            "repetition expressions need size(toks) >= 10, and the "
+            "length filter is what guarantees it)"
+        )
     feats = quality_exprs(F.col("text"))
     scored = docs.select(
         "doc_id",
@@ -116,142 +241,256 @@ def corpus_clean(
         feats["n_tokens"].alias("n_tokens"),
         feats["stopword_ratio"].alias("stopword_ratio"),
     )
-    quality_ok = (
+    passed, dropped = _split(
+        scored,
         (F.col("lang") == lang)
         & (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
+        & (F.col("stopword_ratio") <= max_stopword_ratio),
     )
-    passed = scored.filter(quality_ok)
-    dropped_quality = scored.filter(~quality_ok).select("doc_id")
-
     if repetition_filter:
-        if min_tokens < 10:
-            raise ValueError(
-                "repetition_filter requires min_tokens >= 10 (the "
-                "repetition expressions need size(toks) >= 10, and the "
-                "length filter is what guarantees it)"
-            )
-        from bigdata_cookbook_spark.functions.text import (
-            repetition_keep_all_expr,
-        )
+        from bigdata_cookbook_spark.functions.text import repetition_keep_all_expr
 
-        # pushdown-safe form: the keep conjunction binds the token
-        # array as a lambda variable (functions/text.let_bound), so
-        # when Catalyst pushes this predicate into the scan it still
-        # evaluates split() once per row — a select-bound column would
-        # be re-inlined at every element_at (measured 28s vs 9s at
-        # 500 docs). Short rows yield NULL/False keep (never an
-        # error), so filter-collapse with quality_ok is safe too.
-        rep_keep = repetition_keep_all_expr(F.col("text"))
-        dropped_quality = dropped_quality.unionByName(
-            passed.filter(~rep_keep).select("doc_id")
+        # stage the verdict column so the gram-stats battery runs once,
+        # not once per side of the split
+        passed, rep_dropped = _split(
+            passed.withColumn("__rep", repetition_keep_all_expr(F.col("text"))),
+            F.col("__rep"),
         )
-        passed = passed.filter(rep_keep)
+        passed = passed.drop("__rep")
+        dropped = dropped.unionByName(rep_dropped)
+    return passed, dropped
 
-    # round 11 (guide §3.3, the bm25/tfidf two-consumer fix applied to
-    # the pipeline spine): `passed` feeds the canon groupBy AND the
-    # keeper semi-join, and `exact_kept` feeds the near-dup tier's
-    # shingle index (twice, via the self-join) AND the final anti-join
-    # — without materialization the scan + quality battery + exact
-    # dedup re-execute once per consumer. Two lazy localCheckpoints
-    # truncate the lineage at both fan-out points: measured 5.40 ->
-    # 2.05 s at sf1 (fresh DataFrame per rep, exact tier; the spread
-    # above contributes only jointly with these — A/B'd separately).
-    # Storage trade at 100 TB: two materializations of the survivor
-    # corpus (MEMORY_AND_DISK); a production run that wants durability
-    # instead should stage the survivors through
-    # plans/checkpoint.stage_checkpoint — same pattern, parquet-backed.
-    passed = passed.localCheckpoint(eager=False)
-    canon = passed.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    exact_kept = passed.join(canon.select("doc_id"), "doc_id", "left_semi")
-    exact_kept = exact_kept.localCheckpoint(eager=False)
-    dropped_exact = passed.join(canon.select("doc_id"), "doc_id", "left_anti").select(
-        "doc_id"
+
+def _exact_dedup_stage(
+    passed: DataFrame, state: DataFrame | None = None, hashed: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Exact dedup: each group of identical texts keeps its min doc_id,
+    and a text already in ``state`` (the ``text_hash`` of every text
+    kept by earlier batches) drops. ``hashed`` keys the groups on
+    xxhash64(text) instead of the full text — the incremental form,
+    whose state holds hashes only, so equality is 64-bit-hash equality
+    (dedup.incremental_exact_dedup states the collision odds). Returns
+    (exact_kept, dropped, new_hashes)."""
+    key = F.xxhash64("text") if hashed else F.col("text")
+    canon = passed.groupBy(key.alias("__key")).agg(F.min("doc_id").alias("doc_id"))
+    if state is not None:
+        canon = canon.join(
+            state.select(F.col("text_hash").alias("__key")), "__key", "left_anti"
+        )
+    exact_kept, dropped = _split(
+        passed.join(canon.select("doc_id", F.lit(True).alias("__canon")), "doc_id", "left"),
+        F.col("__canon").isNotNull(),
     )
+    exact_kept = exact_kept.drop("__canon")
+    return exact_kept, dropped, exact_kept.select(F.xxhash64("text").alias("text_hash"))
 
-    if near_dup not in ("exact", "lsh"):
-        raise ValueError(f"near_dup must be 'exact' or 'lsh', got {near_dup!r}")
-    if near_dup == "lsh" and jaccard_df_cap is not None:
-        # fail loud instead of silently scoring with uncapped shingle
-        # sets: the cap changes WHICH pairs qualify (capped Jaccard
-        # deliberately ignores boilerplate-only overlap), so accepting
-        # both would break the lsh-is-a-subset-of-what-you-ran contract;
-        # the lsh verify is already bounded by |candidates| and needs no
-        # cap
+
+def _near_dup_stage(
+    exact_kept: DataFrame,
+    tier: str,
+    threshold: float,
+    n: int = 3,
+    df_cap: int | None = None,
+    shingle_state: DataFrame | None = None,
+    bucket_state: DataFrame | None = None,
+    num_hashes: int = 12,
+    band_size: int = 2,
+) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
+    """Near-dup removal: a doc drops when its word-n-gram Jaccard with a
+    smaller-id exact-kept doc, or with any doc of ``shingle_state`` (the
+    shingle index of every exact-kept doc of earlier batches: first
+    arrival wins), reaches ``threshold``. The new_shingles delta keeps
+    the near-dup losers too: they stay pair sources for later batches,
+    just as a batch run scores pairs over every exact-kept doc.
+
+    ``tier="exact"`` scores every co-shingled pair
+    (dedup.ngram_jaccard_pairs with ``df_cap``; dedup._jaccard_vs_index
+    against the state). ``tier="lsh"`` verifies only the MinHash
+    band-bucket candidates (dedup.incremental_lsh_candidates, against
+    ``bucket_state``) with exact Jaccard; its drop set is a subset of
+    the exact tier's. Returns (kept, dropped, deltas), deltas holding
+    new_shingles and, on the lsh tier, new_buckets — the batch's band
+    rows for docs not yet in the state (append-only: ingest-once ids)."""
+    if tier not in ("exact", "lsh"):
+        raise ValueError(f"near_dup must be 'exact' or 'lsh', got {tier!r}")
+    if tier == "lsh" and df_cap is not None:
+        # the cap changes WHICH pairs qualify (capped Jaccard ignores
+        # boilerplate-only overlap), so accepting it would break the
+        # lsh-is-a-subset-of-what-you-ran contract
         raise ValueError(
             "jaccard_df_cap applies to the exact tier's inverted-index "
             "self-join only; the lsh tier's candidate verify is already "
             "bounded. Drop the cap or use near_dup='exact'."
         )
-    if near_dup == "lsh":
-        from bigdata_cookbook_spark.operators.dedup import (
-            jaccard_verify_pairs,
-            minhash_lsh_candidates,
+    deltas = {"new_shingles": _shingle_index(exact_kept, n=n)}
+    if tier == "lsh":
+        lsh = incremental_lsh_candidates(
+            exact_kept.select("doc_id", "text"),
+            bucket_state,
+            n=n,
+            num_hashes=num_hashes,
+            band_size=band_size,
         )
+        cand, deltas["new_buckets"] = lsh["candidates"], lsh["buckets"]
+        if bucket_state is not None:
+            # a cross pair's larger id can be a state doc (out-of-order
+            # ingest); only batch docs can lose
+            cand = cand.join(
+                exact_kept.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
+            )
+            # append-only: band rows of the batch docs new to the state
+            deltas["new_buckets"] = lsh["buckets"].join(bucket_state, ["doc_id"], "left_anti")
+        pairs = _jaccard_verify(exact_kept, cand, threshold, n=n, state_index=shingle_state)
+        losers = pairs.select(F.col("doc_b").alias("doc_id"))
+    else:
+        losers = ngram_jaccard_pairs(
+            exact_kept, n=n, threshold=threshold, df_cap=df_cap
+        ).select(F.col("doc_b").alias("doc_id"))
+        if shingle_state is not None:
+            losers = losers.unionByName(
+                _jaccard_vs_index(deltas["new_shingles"], shingle_state, threshold)
+            )
+    dropped = losers.distinct().localCheckpoint(eager=False)
+    # fan-out: kept feeds the later stages and the driver's output
+    kept = exact_kept.join(dropped, "doc_id", "left_anti").localCheckpoint(eager=False)
+    return kept, dropped, deltas
 
-        cand = minhash_lsh_candidates(
-            exact_kept, num_hashes=lsh_num_hashes, band_size=lsh_band_size
-        )
-        # Materialize the candidate list once (lazy localCheckpoint —
-        # same precedent as graph.connected_components): the pair list
-        # itself is SMALL (bounded by banding collisions) but its
-        # lineage is the full MinHash banding DAG over the corpus, and
-        # the verify stage references it from three places (the
-        # candidate-doc corpus prune + both join sides) while the
-        # accounting pass and the kept/dropped splits each re-trigger
-        # it per action. Without this, the banding DAG re-executes
-        # multiplicatively: measured at the sf10 capstone, the
-        # dropped_neardup marginal was 491 s un-checkpointed vs 62-68 s
-        # after; the isolated corpus_clean_lsh scaling row drops from
-        # 46.2 s (lazy DAG, banding re-run per reference) to 27.0 s
-        # first-run / 22.8 s steady (BASELINE.md §K).
-        cand = cand.localCheckpoint(eager=False)
-        pairs = jaccard_verify_pairs(
-            exact_kept, cand, threshold=jaccard_threshold
+
+def _decontaminate_stage(
+    kept: DataFrame,
+    eval_df: DataFrame,
+    n: int,
+    threshold: float,
+    broadcast_eval: bool,
+    bloom=False,
+) -> tuple[DataFrame, DataFrame]:
+    """Benchmark decontamination: drop every doc whose n-gram
+    containment of an ``eval_df`` doc reaches ``threshold`` — the
+    training copy of an eval doc included (no self-exemption).
+    ``bloom`` routes the corpus through the map-side Bloom prefilter
+    (dedup.bloom_contamination; bit-identical drop set): True builds the
+    filter, a prebuilt dedup.ShingleBloom over the same eval_df and n is
+    reused, a falsy value keeps the exact shingle join. Stateless."""
+    from bigdata_cookbook_spark.operators.dedup import (
+        bloom_contamination,
+        contamination_pairs,
+    )
+
+    kw = dict(n=n, threshold=threshold, exclude_self=False, broadcast_eval=broadcast_eval)
+    if bloom:
+        raw = bloom_contamination(
+            kept, eval_df, bloom=None if bloom is True else bloom, **kw
         )
     else:
-        pairs = ngram_jaccard_pairs(
-            exact_kept, threshold=jaccard_threshold, df_cap=jaccard_df_cap
-        )
-    near_losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    kept = exact_kept.join(near_losers, "doc_id", "left_anti")
-    out = {
-        "dropped_quality": dropped_quality,
-        "dropped_exact": dropped_exact,
-        "dropped_neardup": near_losers,
-    }
-    if eval_df is not None:
-        from bigdata_cookbook_spark.operators.dedup import (
-            bloom_contamination,
-            contamination_pairs,
-        )
+        raw = contamination_pairs(kept, eval_df, **kw)
+    dropped = (
+        raw.select(F.col("train_id").alias("doc_id")).distinct().localCheckpoint(eager=False)
+    )
+    return kept.join(dropped, "doc_id", "left_anti"), dropped
 
-        # the pre-decontamination survivor set, exposed so accounting
-        # callers (workflows.pretraining_pipeline) can persist it: the
-        # contamination drop count otherwise re-executes the whole
-        # quality -> exact -> near-dup lineage, which at sf10 dwarfed
-        # the contamination work itself ~10x in the per-stage wall
-        # attribution (round-10 capstone finding)
-        out["pre_contamination_kept"] = kept
-        _contam = bloom_contamination if bloom_decontaminate else contamination_pairs
-        contaminated = (
-            _contam(
-                kept,
-                eval_df,
-                n=contamination_n,
-                threshold=contamination_threshold,
-                # decontamination must flag the training COPY of an eval
-                # doc too — never exempt a pair on id equality here
-                exclude_self=False,
-                broadcast_eval=broadcast_eval,
-            )
-            .select(F.col("train_id").alias("doc_id"))
-            .distinct()
+
+def _prune_stage(
+    kept: DataFrame, keep_frac: float = 0.5, thresholds: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Per-domain quality prune by n_tokens (quality_prune): keep the top
+    ``keep_frac`` of each source, cut from this frame's own histogram,
+    or apply the PINNED per-source cut ``thresholds`` (a
+    quality_prune_thresholds snapshot refreshed by maintenance) — the
+    incremental form, since per-batch quantiles would drift with batch
+    composition."""
+    pruned = quality_prune(
+        kept, "n_tokens", "source", keep_frac=keep_frac, thresholds=thresholds
+    ).localCheckpoint(eager=False)
+    return pruned, kept.join(pruned.select("doc_id"), "doc_id", "left_anti").select("doc_id")
+
+
+def _semantic_stage(
+    kept: DataFrame,
+    embeddings_df: DataFrame,
+    threshold: float,
+    n_planes: int | None = None,
+    state: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """SemDeDup-style semantic dedup of the survivors that have an
+    embedding (``embeddings_df``: vec_id == doc_id; docs without one
+    pass through). With ``n_planes=None`` the SRP grid is derived from
+    the embedding count (dedup.semantic_dedup); a pinned ``n_planes``
+    runs dedup.semantic_dedup_incremental against ``state``, the vectors
+    of every doc that ever reached the stage — the grid must be stable
+    for the state's lifetime. Returns (kept, dropped, new_embeddings,
+    None in the derived-grid form)."""
+    from bigdata_cookbook_spark.operators.dedup import (
+        semantic_dedup,
+        semantic_dedup_incremental,
+    )
+
+    # only survivors' embeddings compete: a doc must not drop for
+    # resembling one an earlier stage removed. Fan-out: the dim probe
+    # and the SRP projection both read it.
+    surv_emb = embeddings_df.join(
+        kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+    ).localCheckpoint(eager=False)
+    delta = None
+    if n_planes is None:
+        # plane count sized from the RAW embeddings frame: one count-star
+        # of the input, an upper bound on the survivors, so buckets only
+        # come out smaller than default_srp_planes_for's target
+        sem_kept = semantic_dedup(
+            surv_emb, threshold=threshold, estimated_row_count=embeddings_df.count()
         )
-        kept = kept.join(contaminated, "doc_id", "left_anti")
-        out["dropped_contaminated"] = contaminated
-    out["kept"] = kept.select("doc_id", "lang", "source", "n_tokens")
-    return out
+        dropped = surv_emb.select("vec_id").distinct().join(
+            sem_kept.select("vec_id"), "vec_id", "left_anti"
+        )
+    else:
+        sem = semantic_dedup_incremental(surv_emb, state, threshold=threshold, n_planes=n_planes)
+        dropped, delta = sem["dropped"], sem["new_state"]
+    # fan-out: the kept anti-join and the drop frame; the lineage is the
+    # cogroup GEMM kernel, the priciest node in the chain
+    dropped = dropped.select(F.col("vec_id").alias("doc_id")).localCheckpoint(eager=False)
+    return kept.join(dropped, "doc_id", "left_anti"), dropped, delta
+
+
+def _dsir_stage(
+    docs: DataFrame,
+    lr: list[int] | None = None,
+    threshold: float = 0.0,
+    normalize: bool = True,
+    salt: str = "",
+    target: DataFrame | None = None,
+    keep_k: int | None = None,
+    n_buckets: int = 1024,
+) -> tuple[DataFrame, DataFrame]:
+    """DSIR importance selection over ``docs``' text (operators/
+    selection.py). With ``lr`` — a model fit OFFLINE on a reference
+    snapshot, as selection.collect_logratio's bucket-indexed list — it
+    is a stateless per-row gate: rows whose importance weight
+    (normalized by gram count with ``normalize``, so short docs are not
+    preferred per se) falls below ``threshold`` drop. ``salt`` must be
+    the fit's salt; a mismatch scores differently-bucketed grams with
+    no error to catch it. Without ``lr`` both hashed-gram LMs are fit on
+    ``target`` vs ``docs`` (the ``n_buckets``-row model is collected
+    while the pipeline is built) and the ``keep_k`` highest-weight docs
+    survive: TakeOrdered over a slim (doc_id, score) projection, fine to
+    ~1e6-1e7 k. Returns (survivors, dropped)."""
+    from bigdata_cookbook_spark.operators.selection import (
+        _weight_expr,
+        dsir_logratio_table,
+        dsir_scores_projected,
+        dsir_topk,
+    )
+
+    if lr is not None:
+        kept, dropped = _split(
+            docs.withColumn("__dsir", _weight_expr(F.col("text"), lr, salt, normalize)),
+            F.col("__dsir") >= threshold,
+        )
+        return kept.drop("__dsir"), dropped
+    # the fit aggregates docs twice and the scoring pass reads it again
+    docs = docs.localCheckpoint(eager=False)
+    model = dsir_logratio_table(target, docs, text_col="text", n_buckets=n_buckets)
+    top = dsir_topk(dsir_scores_projected(docs, model), keep_k).select("doc_id")
+    dropped = docs.join(top, "doc_id", "left_anti").select("doc_id").localCheckpoint(eager=False)
+    return docs.join(dropped, "doc_id", "left_anti"), dropped
 
 
 def token_window_chunks(

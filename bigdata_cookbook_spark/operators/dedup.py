@@ -168,14 +168,65 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-        ).alias("jaccard"),
+    return _jaccard_at_least(inter, threshold, "doc_a", "doc_b")
+
+
+def _jaccard_at_least(inter: DataFrame, threshold: float, *keep: str) -> DataFrame:
+    """Rows of ``inter`` — a doc pair's shared-shingle count ``n_common``
+    and shingle counts ``n_a``/``n_b`` — whose Jaccard
+    n_common / (n_a + n_b - n_common), rounded to 4 places, reaches
+    ``threshold``; projects ``keep`` plus the ``jaccard`` score."""
+    jac = F.round(
+        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
     )
-    return jac.filter(F.col("jaccard") >= threshold)
+    return inter.select(*keep, jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
+def _shingle_index(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+) -> DataFrame:
+    """(doc_id, shingle = xxhash64 of the n-gram, n_sh) inverted-index
+    rows — ngram_jaccard_pairs' shingle definition and hash key, with the
+    doc's shingle count denormalized onto every row so a Jaccard needs
+    no size lookup. The incremental near-dup state is this table."""
+    from pyspark.sql import Window
+
+    sh = doc_shingles(df, text_col, id_col, n).select(
+        "doc_id", F.xxhash64("shingle").alias("shingle")
+    )
+    return sh.withColumn(
+        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    )
+
+
+def _jaccard_vs_index(
+    batch_idx: DataFrame, state_idx: DataFrame, threshold: float
+) -> DataFrame:
+    """doc_ids of ``batch_idx`` whose Jaccard against ANY ``state_idx``
+    doc reaches ``threshold`` (both _shingle_index tables).
+
+    An inverted-index join on the shingle hash, so only co-shingled
+    pairs materialize and the cost follows the batch, not the corpus.
+    It still materializes sum(df_batch x df_state) rows per shingle, and
+    df_state grows with everything ever ingested; at corpus scale use the
+    LSH tier, which bounds the candidates by bucket occupancy."""
+    a = batch_idx.alias("a")
+    s = state_idx.alias("s")
+    inter = (
+        a.join(s, F.col("a.shingle") == F.col("s.shingle"))
+        # replay/re-ingest: a doc never near-dups itself
+        .filter(F.col("a.doc_id") != F.col("s.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_id"),
+            F.col("s.doc_id").alias("state_doc"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("s.n_sh").alias("n_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return _jaccard_at_least(inter, threshold, "doc_id").select("doc_id").distinct()
 
 
 def contamination_pairs(
@@ -610,25 +661,39 @@ def minhash_lsh_candidates(
     collide in multiple bands.
 
     Round 12 (§2.2/§3): the bucket SELF-JOIN became groupBy(bucket) +
-    in-array positional pair expansion (the cooccurrence_pairs kernel's
-    posexplode+slice form: codegen'd Generates, no interpreted lambdas,
-    no per-row pair-array buffer). The self-join evaluated the MinHash
-    signature battery TWICE — once per alias; ReuseExchange provably
-    did not dedupe the branches (before-plan: two full battery
-    subtrees, 0 ReusedExchange) — and a checkpoint is deliberately NOT
-    used here (headline bench query: a materialized subtree would let
-    warm reps skip the battery the timer must see). One battery pass +
-    one bucket exchange + expansion in place + the pair distinct:
-    sf1 interleaved A/B 2.82/2.10 -> 1.86/1.51 s (~1.4x), pair set
-    verified identical (52,066 pairs). Expansion is bounded by bucket
-    occupancy (sorted ids; doc_b slices strictly after doc_a, so
-    a < b without a filter) — measured at sf1: max bucket 57 docs,
-    p99.9 = 6, so the per-group work is trivially bounded; a
-    pathologically hot bucket costs the same quadratic pair count the
-    self-join also paid.
+    in-array positional pair expansion (_bucket_pairs). The self-join
+    evaluated the MinHash signature battery TWICE — once per alias;
+    ReuseExchange provably did not dedupe the branches (before-plan: two
+    full battery subtrees, 0 ReusedExchange) — and a checkpoint is
+    deliberately NOT used here (headline bench query: a materialized
+    subtree would let warm reps skip the battery the timer must see).
+    One battery pass + one bucket exchange + expansion in place + the
+    pair distinct: sf1 interleaved A/B 2.82/2.10 -> 1.86/1.51 s
+    (~1.4x), pair set verified identical (52,066 pairs). Measured at
+    sf1: max bucket 57 docs, p99.9 = 6. A hot bucket costs the same
+    quadratic pair count the self-join paid, plus the memory caveat on
+    _bucket_pairs.
     """
     key_cols = [f"k{j}" for j in range(band_size)]
     banded = minhash_band_buckets(df, text_col, id_col, n, num_hashes, band_size)
+    return _bucket_pairs(banded, key_cols)
+
+
+def _bucket_pairs(banded: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(doc_a, doc_b) pairs, doc_a < doc_b, of the docs sharing a
+    (band, key_cols) bucket of a minhash_band_buckets table, distinct.
+
+    groupBy(bucket) collects each bucket's sorted id list, then a
+    posexplode + slice expands it in place (the cooccurrence_pairs
+    kernel's form: codegen'd Generates, no interpreted lambdas, no
+    per-row pair-array buffer); doc_b slices strictly after doc_a, so
+    a < b without a filter.
+
+    Hot-bucket caveat: ``collect_list`` holds a whole band bucket in one
+    aggregation buffer, which cannot spill. A pathologically hot bucket
+    (many docs sharing a band, e.g. templated boilerplate) is bounded by
+    executor memory, not by disk, and its pair count is quadratic in its
+    occupancy."""
     grouped = (
         banded.groupBy("band", *key_cols)
         .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("ids"))
@@ -656,8 +721,7 @@ def jaccard_verify_pairs(
 ) -> DataFrame:
     """Exact word-n-gram Jaccard over a CANDIDATE pair list — the verify
     stage of the 100 TB near-dup funnel (LSH banding generates
-    candidates, this confirms them; the streaming twin is
-    streaming/pipeline._verify_candidates).
+    candidates, this confirms them).
 
     ``candidates``: (doc_a, doc_b) pairs, doc_a < doc_b. Returns the
     pairs whose exact Jaccard reaches ``threshold``, with the score —
@@ -674,15 +738,28 @@ def jaccard_verify_pairs(
     product); the n_sh window's group size is one document's shingles,
     bounded by document length, never corpus size.
     """
-    from pyspark.sql import Window
-
     # defensively dedup the pair list: a duplicated (doc_a, doc_b) row
     # would double its intersection rows through the expand join and
     # inflate n_common multiplicatively (jaccard could exceed 1 and
-    # false-drop) — minhash_lsh_candidates happens to emit distinct
-    # pairs, but this function's no-false-drops contract must not
-    # depend on the caller's discipline
+    # false-drop) — the no-false-drops contract must not depend on the
+    # caller's discipline
     candidates = candidates.select("doc_a", "doc_b").distinct()
+    return _jaccard_verify(df, candidates, threshold, text_col, id_col, n)
+
+
+def _jaccard_verify(
+    df: DataFrame,
+    candidates: DataFrame,
+    threshold: float,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    state_index: DataFrame | None = None,
+) -> DataFrame:
+    """jaccard_verify_pairs' core over DISTINCT ``candidates``. ``df``'s
+    candidate docs are shingled from text; ``state_index`` (an
+    _shingle_index table of earlier batches) supplies the shingles of
+    candidate docs that are not in ``df``."""
     # prune the corpus to candidate docs BEFORE shingling: when the
     # banding stage emits few candidates (the normal case), the explode
     # + n_sh window must not pay a corpus-wide pass
@@ -691,34 +768,25 @@ def jaccard_verify_pairs(
         .union(candidates.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    idx = (
-        doc_shingles(df.join(cand_ids, id_col, "left_semi"), text_col, id_col, n)
-        .select(
-            F.col("doc_id"),
-            F.xxhash64("shingle").alias("sh"),
-        )
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    )
+    idx = _shingle_index(df.join(cand_ids, id_col, "left_semi"), text_col, id_col, n)
+    if state_index is not None:
+        idx = idx.unionByName(state_index)
     a = idx.select(
-        F.col("doc_id").alias("doc_a"), "sh", F.col("n_sh").alias("n_a")
+        F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh"), F.col("n_sh").alias("n_a")
     )
     b = idx.select(
-        F.col("doc_id").alias("doc_b"), "sh", F.col("n_sh").alias("n_b")
+        F.col("doc_id").alias("doc_b"), F.col("shingle").alias("sh"), F.col("n_sh").alias("n_b")
     )
+    # expand each pair to doc_a's shingle rows, then equi-join the b side
+    # on BOTH (doc_b, sh) — intersection rows materialize directly, never
+    # the per-pair |sh_a| x |sh_b| cross product
     inter = (
         candidates.join(a, "doc_a")
         .join(b, ["doc_b", "sh"])
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-        ).alias("jaccard"),
-    )
-    return jac.filter(F.col("jaccard") >= threshold)
+    return _jaccard_at_least(inter, threshold, "doc_a", "doc_b")
 
 
 def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -823,52 +891,34 @@ def incremental_lsh_candidates(
     state update is LATEST-INGEST-WINS: rows for re-ingested doc ids are
     replaced, so a doc whose text changed never leaves stale signatures
     behind (and a byte-identical replay leaves the state unchanged).
+    Within-batch pairs come from minhash_lsh_candidates' bucket grouping
+    (_bucket_pairs, with its hot-bucket caveat).
     Cost: the candidate cross join keys on the (band, k*) bucket
     columns, the state replacement anti-joins on doc_id — with the state
     table bucketed on those keys (plans/layout.py) both are shuffle-free
     on the state side; nothing re-aggregates the accumulated state.
     """
     key_cols = [f"k{j}" for j in range(band_size)]
-    # round 12 (guide §3.3): the banded signatures feed FOUR consumers
-    # (both sides of the within-batch self-join, the state replacement
-    # anti-probe, and the new-state union) — without materialization the
-    # shingle + 12-hash MinHash battery re-executes per consumer. One
-    # lazy localCheckpoint of the batch-sized signature table.
+    # round 12 (guide §3.3): the banded signatures feed the within-batch
+    # bucket grouping, the cross join against the state, the state
+    # replacement anti-probe and the new-state union — without
+    # materialization the shingle + MinHash battery re-executes per
+    # consumer. One lazy localCheckpoint of the batch-sized table.
     banded = minhash_band_buckets(
         new_docs, text_col, id_col, n, num_hashes, band_size
     ).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    key_eq = F.lit(True)
-    for k in key_cols:
-        key_eq = key_eq & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    within = (
-        a.join(
-            b,
-            key_eq
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    within = _bucket_pairs(banded, key_cols)
     if seen_buckets is not None:
-        s = seen_buckets.alias("s")
-        key_eq_s = F.lit(True)
-        for k in key_cols:
-            key_eq_s = key_eq_s & (F.col(f"a.{k}") == F.col(f"s.{k}"))
         cross = (
-            a.join(
-                s,
-                key_eq_s
-                & (F.col("a.band") == F.col("s.band"))
-                # replayed/re-ingested docs exist on both sides — a doc
-                # must never become a near-dup candidate of itself
-                & (F.col("a.doc_id") != F.col("s.doc_id")),
+            banded.join(
+                seen_buckets.withColumnRenamed("doc_id", "__s"), ["band", *key_cols]
             )
+            # replayed/re-ingested docs exist on both sides — a doc
+            # must never become a near-dup candidate of itself
+            .filter(F.col("doc_id") != F.col("__s"))
             .select(
-                F.least(F.col("a.doc_id"), F.col("s.doc_id")).alias("doc_a"),
-                F.greatest(F.col("a.doc_id"), F.col("s.doc_id")).alias("doc_b"),
+                F.least("doc_id", "__s").alias("doc_a"),
+                F.greatest("doc_id", "__s").alias("doc_b"),
             )
             .distinct()
         )

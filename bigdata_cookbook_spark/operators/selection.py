@@ -288,12 +288,20 @@ def dsir_scores_projected(
     known length bias of unnormalized importance weights. Normalized
     scores rank by *how target-like the text is*, not how much of it
     there is; gram-free documents still score 0.0."""
-    lr = collect_logratio(logratio)
-    score = dsir_score_expr(F.col(text_col), lr, salt)
-    if normalize:
-        n = F.size(gram_array_expr(F.col(text_col)))
-        score = F.when(n > 0, score / n).otherwise(F.lit(0.0))
+    score = _weight_expr(F.col(text_col), collect_logratio(logratio), salt, normalize)
     return docs.select(id_col, score.alias("score"))
+
+
+def _weight_expr(
+    text: Column, lr_micro_by_bucket: list[int], salt: str, normalize: bool
+) -> Column:
+    """dsir_score_expr, divided by the gram count when ``normalize``
+    (gram-free documents score 0.0)."""
+    score = dsir_score_expr(text, lr_micro_by_bucket, salt)
+    if normalize:
+        n = F.size(gram_array_expr(text))
+        score = F.when(n > 0, score / n).otherwise(F.lit(0.0))
+    return score
 
 
 def dsir_gate(
@@ -313,11 +321,7 @@ def dsir_gate(
     and the declared batch alternative to TakeOrdered when k is too
     large for a driver merge (pick the threshold from a sampled
     quantile of the scores)."""
-    lr = collect_logratio(logratio)
-    score = dsir_score_expr(F.col(text_col), lr, salt)
-    if normalize:
-        n = F.size(gram_array_expr(F.col(text_col)))
-        score = F.when(n > 0, score / n).otherwise(F.lit(0.0))
+    score = _weight_expr(F.col(text_col), collect_logratio(logratio), salt, normalize)
     return docs.withColumn(score_col, score).filter(
         F.col(score_col) >= threshold
     )

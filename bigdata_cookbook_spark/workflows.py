@@ -309,7 +309,8 @@ def pretraining_pipeline(
     dsir_n_buckets: int = 1024,
 ) -> dict[str, DataFrame]:
     """Capstone composition of the training-data tier — the full corpus
-    -> training-set flow, each stage an individually-oracled operator:
+    -> training-set flow, each stage an individually-oracled operator
+    (the cleaning stages live in operators/corpus.py):
 
         [domain blocklist -> URL dedup ->]
         [HTML -> text ->] [line-wise corrections ->]
@@ -317,120 +318,89 @@ def pretraining_pipeline(
         quality filter [+ repetition rules]
         -> exact dedup -> near-dup removal
         [-> decontaminate vs eval_df] [-> per-domain quality prune]
-        [-> semantic dedup] [-> domain-mix resample]
+        [-> semantic dedup] [-> DSIR] [-> domain-mix resample]
         -> deterministic shuffle key + length-curriculum bucket
 
     Optional stages (all off by default, preserving the oracled
-    baseline shape): ``url_col`` names a crawl-record URL column and
-    turns on RefinedWeb's first stage, BEFORE any text work — docs
-    whose registered domain is in ``domain_blocklist`` drop (booked as
-    ``dropped_domain_blocklist``), then canonical-URL exact dedup keeps
-    the best capture per URL (dedup.url_dedup_keep_best: longest text,
-    tie lowest id; booked as ``dropped_url_dedup``); the URL column is
-    consumed by the stage and not carried further;
-    ``paragraph_dedup_sep`` (e.g. ``"\\n"``) rewrites
-    document text with corpus-wide paragraph dedup
-    (corpus.paragraph_dedup — the Dolma/CCNet boilerplate-footer pass)
-    BEFORE everything else: structural boilerplate is the coarsest
-    duplication, so removing it first keeps the span/token stages from
-    re-discovering the same footers window by window;
-    ``line_filter`` runs the RefinedWeb line-wise corrections
-    (functions/text.line_filter_exprs) right after HTML extraction and
-    BEFORE the dedup stages: kept docs carry the line-cleaned text,
-    docs whose kept text falls under half the original drop whole,
-    booked as ``dropped_line_filter``;
-    ``span_dedup_tokens`` rewrites document text
-    next with C4-style duplicate-span removal (corpus.span_dedup) —
-    C4's order, so later token counts see the deduped text;
-    ``repetition_filter`` adds the Gopher n-gram repetition rules to
-    the quality stage (corpus_clean passthrough); ``embeddings_df``
-    (id-aligned: its vec_id == doc_id) adds SemDeDup-style semantic
-    near-dup removal (dedup.semantic_dedup at ``semantic_threshold``)
-    after the text-level stages — text near-dups are cheaper to find
-    and decontamination must never be masked by a dedup drop, so the
-    embedding pass runs last and only sees survivors;
-    ``quality_prune_frac`` keeps only that top fraction of each source
-    by n_tokens (corpus.quality_prune — the FineWeb-style
-    keep-the-best-X%-per-domain cut), applied after cleaning +
-    decontamination and before the semantic stage, booked as
-    ``dropped_quality_prune``; ``bloom_decontaminate`` passes through
-    to corpus_clean — the decontamination drop set is bit-identical,
-    only the plan changes (map-side Bloom prefilter instead of the
-    full shingle join); ``near_dup`` passes through to corpus_clean —
-    ``"lsh"`` swaps the near-dup stage's inverted-index self-join for
-    the MinHash-banding + candidate-verify funnel (the batch twin of
-    the streaming pipeline's production tier; the drop set is a SUBSET
-    of the exact tier's, short only of banding recall — corpus_clean's
-    docstring carries the trade); ``dsir_target`` (a DataFrame with a ``text``
-    column) turns on DSIR importance resampling
-    (operators/selection.py) as the LAST drop stage — after dedup /
-    decontamination / semantic so the selector only ranks docs allowed
-    to train at all, before mixing so target shares apply to the
-    targeted pool: hashed-gram LMs fit on the target sample vs the
-    surviving pool, keep the ``dsir_keep_k`` (required with
-    ``dsir_target``) highest-weight docs, booked as ``dropped_dsir``.
-    Selection is TakeOrdered over a slim (doc_id, score) projection —
-    fine to ~1e6-1e7 k; beyond that the declared alternative is a
-    sampled score threshold + filter (same scores, no driver merge).
-    The ``dsir_n_buckets``-row model is COLLECTED during pipeline
-    construction (bounded by contract — selection.py module notes).
+    baseline shape):
 
-    Returns {clean, mixed, training_set, accounting, stage_seconds}:
-    ``stage_seconds`` (None when ``with_accounting=False``) maps each
-    accounting stage to the wall seconds its drop count took, plus a
-    ``prefix_materialize`` row — the persisted shared prefixes (and
-    ``clean`` itself) are counted once, timed, BEFORE the per-stage
-    loop, so each stage's number is its own marginal cost on warmed
-    caches and is independent of acc_rows order (a first-counted stage
-    would otherwise absorb the one-time prefix cost); the numbers do
-    not sum to the end-to-end wall because the prefix row carries the
-    shared work;
-    ``training_set``
-    carries (doc_id, source, n_tokens, shuffle_key, bucket) — write it
-    with sampling.deterministic_shuffle's range partitioning and readers
-    stream a reproducible permutation. With ``shard_bytes`` set it also
-    carries ``shard_id``: byte-targeted output shards
-    (sampling.pack_shards) in the training order (shuffle_key, doc_id),
-    sized from the text the model actually trains on (post-span-rewrite
-    when that stage is active) — ``write.partitionBy("shard_id")``
-    realizes ~shard_bytes files; ``accounting`` (None when
-    ``with_accounting=False``) is one row per pipeline stage with its
-    drop count (the audit trail a production data pipeline is judged
-    on). Every stage is deterministic: the same corpus + parameters
-    yield the same training set on any engine.
+    - ``url_col`` names a crawl-record URL column and turns on
+      RefinedWeb's first stage, BEFORE any text work: docs whose
+      registered domain is in ``domain_blocklist`` drop
+      (``dropped_domain_blocklist``), then canonical-URL exact dedup
+      keeps the best capture per URL (dedup.url_dedup_keep_best:
+      longest text, tie lowest id; ``dropped_url_dedup``). The URL
+      column is not carried further.
+    - ``html_input`` extracts text from HTML before every text stage
+      (block closers become the newlines the paragraph stage keys on).
+    - ``line_filter`` runs the RefinedWeb line-wise corrections before
+      the dedup stages, so boilerplate lines never seed matches
+      (``dropped_line_filter``).
+    - ``paragraph_dedup_sep`` (e.g. ``"\\n"``) rewrites the text with
+      corpus-wide paragraph dedup, the coarsest duplication first, then
+      ``span_dedup_tokens`` with C4-style duplicate-span removal, so
+      later token counts see the deduped text.
+    - ``repetition_filter``, ``jaccard_df_cap``, ``bloom_decontaminate``
+      and ``near_dup`` pass through to corpus_clean (its docstring
+      carries the exact/lsh trade: the lsh drop set is a SUBSET of the
+      exact tier's, short only of banding recall).
+    - ``quality_prune_frac`` keeps that top fraction of each source by
+      n_tokens after decontamination (corpus.quality_prune, the
+      FineWeb-style cut; ``dropped_quality_prune``).
+    - ``embeddings_df`` (vec_id == doc_id) adds SemDeDup-style semantic
+      dedup at ``semantic_threshold`` after the text stages: text
+      near-dups are cheaper to find and decontamination must never be
+      masked by a dedup drop (``dropped_semantic``).
+    - ``dsir_target`` (a frame with a ``text`` column) turns on DSIR
+      importance resampling as the LAST drop stage, so the selector
+      only ranks docs allowed to train at all and target shares apply
+      to the targeted pool: keep the ``dsir_keep_k`` (required)
+      highest-weight docs (``dropped_dsir``). The ``dsir_n_buckets``-row
+      model is collected while the pipeline is built.
 
-    Cost shape: ``clean`` is persist()ed — it feeds the mix (whose quota
-    pass counts it), the curriculum, and the accounting, and without the
-    persist each of those re-executes the quality/dedup/contamination
-    lineage from scratch. The cache is handed to the CALLER: release it
-    with ``out["clean"].unpersist()`` once the outputs are written —
-    repeated invocations (sweeps, nightly jobs) otherwise accumulate one
-    cached corpus copy per call. Curriculum buckets come from the n_tokens
-    column clean already carries (length_curriculum_from_counts) — no
-    join back to the text, no re-tokenization. Accounting materializes
-    one count per stage; pass with_accounting=False to keep the whole
-    return lazy (counts skipped, nothing cached but ``clean``; the one
-    exception is a count-star over ``embeddings_df`` when the semantic
-    stage is on — it sizes the SRP plane count, and it scans only the
-    raw input frame, never the cleaning lineage).
+    Returns {clean, mixed, training_set, accounting, stage_seconds}.
+    ``training_set`` carries (doc_id, source, n_tokens, shuffle_key,
+    bucket) — write it with sampling.deterministic_shuffle's range
+    partitioning and readers stream a reproducible permutation; with
+    ``shard_bytes`` it also carries ``shard_id``, byte-targeted shards
+    (sampling.pack_shards) in the training order, sized from the text
+    the model trains on — ``write.partitionBy("shard_id")`` realizes
+    ~shard_bytes files. ``accounting`` is one row per stage with its
+    drop count; ``stage_seconds`` maps each stage to the wall seconds
+    its count took, plus ``prefix_materialize``, the first count of
+    ``clean``, which runs the shared upstream work once so each
+    stage's figure is its own marginal cost and independent of order
+    (the figures do not sum to the end-to-end wall). Both are None
+    with ``with_accounting=False``, which runs no counts. Every stage
+    is deterministic: the same corpus + parameters yield the same
+    training set on any engine.
+
+    Cost shape: every stage materializes its own fan-out node (lazy
+    localCheckpoints), so no count re-runs an upstream stage; curriculum
+    buckets come from the n_tokens column ``clean`` already carries.
+    ``clean`` is persist()ed — it feeds the mix, the curriculum and the
+    accounting — and the cache is handed to the CALLER: release it with
+    ``out["clean"].unpersist()`` once the outputs are written, or
+    repeated invocations accumulate one cached corpus copy per call.
     """
     from bigdata_cookbook_spark.operators.corpus import (
+        _dsir_stage,
+        _line_filter_stage,
+        _paragraph_stage,
+        _prune_stage,
+        _semantic_stage,
+        _span_stage,
+        _split,
         corpus_clean,
         length_curriculum_from_counts,
     )
     from bigdata_cookbook_spark.operators.sampling import domain_mix_sample, shuffle_key
 
-    # bounded-lifetime caches for the accounting pass: every dropped_*
-    # count re-executes its stage lineage, so without these the span
-    # rewrite (a corpus-wide shuffle) and the pre-semantic kept set
-    # re-run once per counted stage. Released before returning —
-    # only ``clean``'s cache is handed to the caller.
-    temp_caches = []
-
-    dropped_blocklist = None
-    dropped_url = None
     if domain_blocklist and url_col is None:
         raise ValueError("domain_blocklist requires url_col")
+    if dsir_target is not None and dsir_keep_k is None:
+        raise ValueError("dsir_target requires dsir_keep_k")
+    drops: dict[str, DataFrame] = {}  # accounting stage -> doc_id frame
     if url_col is not None:
         from bigdata_cookbook_spark.functions.url import (
             canonicalize_url_expr,
@@ -446,21 +416,13 @@ def pretraining_pipeline(
             dom = registered_domain_expr(
                 url_host_expr(canonicalize_url_expr(F.col(url_col)))
             )
-            staged = docs.withColumn("__dom", dom)
-            if with_accounting:
-                staged = staged.persist()
-                temp_caches.append(staged)
-            blocked = F.col("__dom").isin(list(domain_blocklist))
-            dropped_blocklist = staged.filter(blocked).select("doc_id")
-            docs = staged.filter(~blocked).drop("__dom")
-        pre_url = docs
-        if with_accounting:
-            # the anti-join below re-executes the (possibly blocklist-
-            # filtered) lineage once per count without this
-            pre_url = pre_url.persist()
-            temp_caches.append(pre_url)
-        kept_url = url_dedup_keep_best(pre_url, url_col=url_col)
-        dropped_url = pre_url.join(
+            docs, drops["dropped_domain_blocklist"] = _split(
+                docs.withColumn("__dom", dom),
+                ~F.col("__dom").isin(list(domain_blocklist)),
+            )
+            docs = docs.drop("__dom")
+        kept_url = url_dedup_keep_best(docs, url_col=url_col).localCheckpoint(eager=False)
+        drops["dropped_url_dedup"] = docs.join(
             kept_url.select("doc_id"), "doc_id", "left_anti"
         ).select("doc_id")
         docs = kept_url.drop("n_url_dups", url_col)
@@ -468,88 +430,13 @@ def pretraining_pipeline(
     if html_input:
         from bigdata_cookbook_spark.functions.text import html_to_text_expr
 
-        # raw-crawl corpora arrive as HTML; extract BEFORE every text
-        # stage so paragraph/span/quality all see readable text (block
-        # closers become newlines — exactly what the paragraph stage
-        # keys on). A rewrite, not a drop: nothing to book.
         docs = docs.withColumn("text", html_to_text_expr(F.col("text")))
-
-    dropped_line = None
     if line_filter:
-        from bigdata_cookbook_spark.functions.text import line_filter_exprs
-
-        # RefinedWeb order: line-wise corrections run on the extracted
-        # text BEFORE the dedup stages, so boilerplate lines never seed
-        # paragraph/span/near-dup matches. Both a rewrite (kept docs
-        # carry the cleaned text) and a drop (a doc whose kept text is
-        # under half the original goes whole, booked as
-        # dropped_line_filter).
-        lf = line_filter_exprs(F.col("text"))
-        staged = docs.select(
-            "doc_id",
-            lf["text_clean"].alias("__clean"),
-            lf["doc_keep"].alias("__keep"),
-            "lang",
-            "source",
-        )
-        if with_accounting:
-            staged = staged.persist()
-            temp_caches.append(staged)
-        dropped_line = staged.filter(~F.col("__keep")).select("doc_id")
-        docs = staged.filter(F.col("__keep")).select(
-            "doc_id", F.col("__clean").alias("text"), "lang", "source"
-        )
-
+        docs, drops["dropped_line_filter"] = _line_filter_stage(docs)
     if paragraph_dedup_sep is not None:
-        from bigdata_cookbook_spark.operators.corpus import paragraph_dedup
-
-        para_rw = paragraph_dedup(docs, sep=paragraph_dedup_sep).select(
-            "doc_id", F.col("text_deduped").alias("text")
-        )
-        # paragraph_dedup emits a row per input doc, but the left join +
-        # coalesce keeps the blank-doc contract identical to the span
-        # stage: an emptied doc flows into the quality stage and is
-        # dropped + booked there
-        docs = (
-            docs.drop("text")
-            .join(para_rw, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
-        )
-        if with_accounting:
-            docs = docs.persist()
-            temp_caches.append(docs)
-
+        docs, _ = _paragraph_stage(docs, paragraph_dedup_sep)
     if span_dedup_tokens is not None:
-        from bigdata_cookbook_spark.operators.corpus import span_dedup
-
-        rewritten = span_dedup(
-            docs, span_tokens=span_dedup_tokens
-        ).select("doc_id", F.col("text_deduped").alias("text"))
-        # left join + coalesce: a blank-on-arrival doc (span_dedup emits
-        # no row for it) carries empty text into the quality stage and
-        # is dropped + booked there — an inner join would silently lose
-        # it and break the accounting-sums-exactly invariant
-        docs = (
-            docs.drop("text")
-            .join(rewritten, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
-        )
-        if with_accounting:
-            docs = docs.persist()
-            temp_caches.append(docs)
-
-    # jaccard_df_cap: REQUIRED at corpus scale (quadratic exact form —
-    # BASELINE.md §D); default None keeps the oracle-tier semantics
+        docs, _ = _span_stage(docs, span_dedup_tokens)
     stages = corpus_clean(
         docs,
         lang=lang,
@@ -560,131 +447,27 @@ def pretraining_pipeline(
         bloom_decontaminate=bloom_decontaminate,
         near_dup=near_dup,
     )
+    for name in ("dropped_quality", "dropped_exact", "dropped_neardup"):
+        drops[name] = stages[name]
     clean = stages["kept"]
-    if with_accounting and eval_df is not None:
-        # persist the pre-decontamination survivor set: the
-        # decontamination branch (Bloom probe or exact join) and every
-        # consumer of ``clean`` otherwise re-execute the full quality ->
-        # exact -> near-dup lineage per action. At the sf10 capstone the
-        # contamination stage's attributed wall was 298.5 s of which
-        # ~90% was this uncached prefix re-run, not contamination work
-        # (round-10 finding; the Bloom prefilter itself was already on).
-        pre_contam = stages["pre_contamination_kept"].persist()
-        temp_caches.append(pre_contam)
-
-    dropped_prune = None
     if quality_prune_frac is not None:
-        from bigdata_cookbook_spark.operators.corpus import quality_prune
-
-        # localCheckpoint, NOT persist: the prune joins the cleaned
-        # corpus against itself (histogram -> threshold -> join-back +
-        # the drop-set anti-join) on top of an already-deep optional-
-        # stage lineage (paragraph/span rewrites, bloom prefilter,
-        # decontamination). A cache would keep the full logical plan,
-        # whose tree STRING alone blows the driver heap at
-        # explain/event-log time once every stage is on (found by the
-        # all-stages-on example); checkpointing truncates the plan —
-        # the same move connected_components makes per fixpoint round.
-        # eager only under accounting (which runs actions anyway); the
-        # lazy path truncates at its single action, keeping the
-        # one-action contract below.
-        clean = clean.localCheckpoint(eager=with_accounting)
-        pruned = quality_prune(
-            clean, "n_tokens", "source", keep_frac=quality_prune_frac
-        )
-        dropped_prune = clean.join(
-            pruned.select("doc_id"), "doc_id", "left_anti"
-        ).select("doc_id")
-        clean = pruned
-
-    dropped_semantic = None
+        clean, drops["dropped_quality_prune"] = _prune_stage(clean, keep_frac=quality_prune_frac)
     if embeddings_df is not None:
-        from bigdata_cookbook_spark.operators.dedup import semantic_dedup
-
-        if with_accounting:
-            # the pre-semantic kept set feeds the semantic join AND its
-            # drop count — cache it for the accounting pass
-            clean = clean.persist()
-            temp_caches.append(clean)
-
-        # only survivors' embeddings compete: a doc must not be dropped
-        # for resembling one that an earlier stage already removed
-        surv_emb = embeddings_df.join(
-            clean.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
+        clean, drops["dropped_semantic"], _ = _semantic_stage(
+            clean, embeddings_df, semantic_threshold
         )
-        if with_accounting:
-            # semantic_dedup self-joins its input, so an uncached
-            # surv_emb executes the whole upstream cleaning lineage
-            # once per join side per action — ruinous across the
-            # accounting counts (measured 142s -> 9s on the sf0.001
-            # example). The lazy with_accounting=False path performs
-            # one action total and keeps the documented
-            # nothing-cached-but-clean contract.
-            surv_emb = surv_emb.persist()
-            temp_caches.append(surv_emb)
-        # plane count sized from the RAW embeddings frame (one cheap
-        # count-star on the input, not on surv_emb whose count would
-        # execute the whole cleaning lineage): an upper bound on the
-        # survivor count, so buckets only come out smaller than the
-        # bucket-size target (default_srp_planes_for's 64 rows) — never super-linear
-        sem_kept = semantic_dedup(
-            surv_emb,
-            threshold=semantic_threshold,
-            estimated_row_count=embeddings_df.count(),
-        )
-        # restrict the drop to docs that actually HAD an embedding: a
-        # surviving doc absent from embeddings_df never entered the
-        # semantic stage (left_semi above), so anti-joining the whole
-        # clean set against sem_kept would silently remove it and book
-        # the loss as "dropped_semantic" — mislabeled data loss in the
-        # audit trail. Docs without embedding coverage pass through.
-        covered = clean.join(
-            embeddings_df.select(F.col("vec_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        dropped_semantic = covered.join(
-            sem_kept.select(F.col("vec_id").alias("doc_id")),
-            "doc_id",
-            "left_anti",
-        ).select("doc_id")
-        clean = clean.join(dropped_semantic, "doc_id", "left_anti")
-
-    dropped_dsir = None
     if dsir_target is not None:
-        if dsir_keep_k is None:
-            raise ValueError("dsir_target requires dsir_keep_k")
-        from bigdata_cookbook_spark.operators.selection import (
-            dsir_logratio_table,
-            dsir_scores_projected,
-            dsir_topk,
-        )
-
         # score the SURVIVING pool's current text (docs carries the
-        # line-filtered / span-rewritten form when those stages are on)
-        pool = docs.join(clean.select("doc_id"), "doc_id", "left_semi")
-        if with_accounting:
-            # the fit collects two aggregates over pool and the scoring
-            # pass reads it again — cache it for the construction-time
-            # jobs plus the accounting counts
-            pool = pool.persist()
-            temp_caches.append(pool)
-        lr = dsir_logratio_table(
-            dsir_target, pool, text_col="text", n_buckets=dsir_n_buckets
+        # line-filtered / rewritten form when those stages are on)
+        _, drops["dropped_dsir"] = _dsir_stage(
+            docs.join(clean.select("doc_id"), "doc_id", "left_semi"),
+            target=dsir_target,
+            keep_k=dsir_keep_k,
+            n_buckets=dsir_n_buckets,
         )
-        kept_ids = dsir_topk(
-            dsir_scores_projected(pool, lr), dsir_keep_k
-        ).select("doc_id")
-        if with_accounting:
-            kept_ids = kept_ids.persist()
-            temp_caches.append(kept_ids)
-        dropped_dsir = clean.join(kept_ids, "doc_id", "left_anti").select(
-            "doc_id"
-        )
-        clean = clean.join(kept_ids, "doc_id", "left_semi")
-
+        clean = clean.join(drops["dropped_dsir"], "doc_id", "left_anti")
+    if eval_df is not None:
+        drops["dropped_contaminated"] = stages["dropped_contaminated"]
     clean = clean.persist()
 
     mixed = (
@@ -705,7 +488,7 @@ def pretraining_pipeline(
         from bigdata_cookbook_spark.operators.sampling import pack_shards
 
         # bytes of the text the model trains on: ``docs`` is the
-        # span-rewritten frame when that stage is active. Slim join —
+        # rewritten frame when those stages are active. Slim join —
         # only (doc_id, bytes) enters the prefix-sum shuffles.
         sized = training_set.join(
             docs.select("doc_id", F.octet_length("text").alias("__bytes")),
@@ -715,72 +498,30 @@ def pretraining_pipeline(
             sized, ["shuffle_key", "doc_id"], "__bytes", shard_bytes
         ).drop("__bytes")
 
-    accounting = None
+    accounting = stage_seconds = None
     if with_accounting:
-        spark = docs.sparkSession
-        acc_rows = [
-            ("dropped_quality", stages["dropped_quality"]),
-            ("dropped_exact", stages["dropped_exact"]),
-            ("dropped_neardup", stages["dropped_neardup"]),
-        ]
-        if dropped_line is not None:
-            acc_rows.insert(0, ("dropped_line_filter", dropped_line))
-        if dropped_url is not None:
-            acc_rows.insert(0, ("dropped_url_dedup", dropped_url))
-        if dropped_blocklist is not None:
-            acc_rows.insert(0, ("dropped_domain_blocklist", dropped_blocklist))
-        if dropped_prune is not None:
-            acc_rows.append(("dropped_quality_prune", dropped_prune))
-        if dropped_semantic is not None:
-            acc_rows.append(("dropped_semantic", dropped_semantic))
-        if dropped_dsir is not None:
-            acc_rows.append(("dropped_dsir", dropped_dsir))
-        if eval_df is not None:
-            acc_rows.append(("dropped_contaminated", stages["dropped_contaminated"]))
-        # per-stage wall attribution rides along with the accounting
-        # counts (round-8 VERDICT item 6): each drop count is the first
-        # action over that stage's lineage (given the prefix caches),
-        # so its wall time IS the stage's incremental cost. Stages
-        # share persisted prefixes, so the seconds measure marginal
-        # work and do not sum to the end-to-end wall. The shared
-        # prefixes are MATERIALIZED before the timed loop (the
-        # ``prefix_materialize`` row below): without that, whichever
-        # count happened to run first absorbed the one-time prefix
-        # cost, making each stage's number order-dependent (round-9
-        # ADVICE) — with it, re-ordering acc_rows no longer moves any
-        # stage's seconds, and each number is the stage's own marginal
-        # cost on warmed caches.
         import time as _time
 
         stage_seconds = {}
         t0 = _time.perf_counter()
-        for dfx in temp_caches:
-            dfx.count()
         clean.count()
         stage_seconds["prefix_materialize"] = round(_time.perf_counter() - t0, 3)
         acc_counts = []
-        for name, dfx in acc_rows:
+        for name, dfx in drops.items():
             t0 = _time.perf_counter()
             acc_counts.append((name, dfx.count()))
             stage_seconds[name] = round(_time.perf_counter() - t0, 3)
         t0 = _time.perf_counter()
         n_mixing = clean.count() - mixed.count() if target_shares else 0
         stage_seconds["dropped_mixing"] = round(_time.perf_counter() - t0, 3)
-        accounting = spark.createDataFrame(
+        accounting = docs.sparkSession.createDataFrame(
             acc_counts + [("dropped_mixing", n_mixing)],
             "stage string, n_dropped long",
         )
-    if temp_caches:
-        # materialize the caller-facing cache before releasing the
-        # temporaries it is built from, so later actions on ``clean``
-        # never re-run the span/semantic lineage uncached
-        clean.count()
-        for df in temp_caches:
-            df.unpersist()
     return {
         "clean": clean,
         "mixed": mixed,
         "training_set": training_set,
         "accounting": accounting,
-        "stage_seconds": stage_seconds if with_accounting else None,
+        "stage_seconds": stage_seconds,
     }

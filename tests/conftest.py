@@ -23,7 +23,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # SPARK_GRAFT_FULL_TESTS=1. The full profile is executed and recorded
 # every round at close-out (OPTIMIZATION_r12.md); the fast profile is
 # what the driver's bounded-window gate runs.
-FULL_PROFILE = bool(os.environ.get("SPARK_GRAFT_FULL_TESTS"))
+FULL_PROFILE = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
 
 def pytest_configure(config):

@@ -207,6 +207,19 @@ def test_lsh_near_dup_tier_two_batches(spark, docs):
     assert lsh_dropped <= exact_dropped
 
 
+def test_incremental_lsh_one_batch_equals_batch_capstone(spark, docs):
+    """The near-dup stage is shared: one batch with no state through the
+    incremental pipeline on the LSH tier equals corpus_clean on the LSH
+    tier, on the kept rows and on every drop set."""
+    batch = corpus_clean(docs, near_dup="lsh")
+    inc = incremental_corpus_clean(docs, near_dup="lsh")
+    for key in ("dropped_quality", "dropped_exact", "dropped_neardup"):
+        assert _ids(inc[key]) == _ids(batch[key]), key
+    assert _ids(batch["dropped_neardup"])  # the fixture plants near-dups
+    want = {tuple(r) for r in batch["kept"].collect()}
+    assert {tuple(r) for r in inc["kept"].collect()} == want
+
+
 def test_streaming_lsh_mode_end_to_end(spark, docs, tmp_path):
     """foreachBatch with near_dup='lsh': bucket-state deltas land per
     batch and the drained kept set equals the batch-callable LSH chain."""

@@ -57,27 +57,21 @@ def main() -> None:
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
     )
-    from bigdata_cookbook_spark.functions.text import quality_exprs
+    from bigdata_cookbook_spark.operators.corpus import (
+        _exact_dedup_stage,
+        _quality_stage,
+    )
     from bigdata_cookbook_spark.session import get_spark
     from bigdata_cookbook_spark.sources.testdata import load_table
 
     spark = get_spark("lsh-recall")
     docs = load_table(spark, sf_dir, "documents")
 
-    # corpus_clean's pre-near-dup prefix (operators/corpus.py:102-144):
-    # quality gate at the defaults, then exact-text canonical dedup —
-    # the LSH tier must be scored on the input it actually sees
-    feats = quality_exprs(F.col("text"))
-    passed = docs.select(
-        "doc_id", "text", "lang", feats["n_tokens"].alias("n_tokens"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-    ).filter(
-        (F.col("lang") == "en")
-        & (F.col("n_tokens") >= 10)
-        & (F.col("stopword_ratio") <= 0.8)
-    )
-    canon = passed.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    exact_kept = passed.join(canon.select("doc_id"), "doc_id", "left_semi").cache()
+    # corpus_clean's pre-near-dup stages at its defaults (quality gate,
+    # exact-text canonical dedup) — the LSH tier must be scored on the
+    # input it actually sees
+    passed, _ = _quality_stage(docs, "en", 10, 0.8, False)
+    exact_kept = _exact_dedup_stage(passed)[0].cache()
     n_docs = exact_kept.count()
 
     t_min = min(THRESHOLDS)
@@ -90,10 +84,10 @@ def main() -> None:
     cand = minhash_lsh_candidates(
         exact_kept, num_hashes=num_hashes, band_size=band_size
     )
-    # materialize the pair list once, exactly as corpus_clean's lsh
-    # tier does — without this the banding DAG re-executes through the
-    # verify stage's three references and lsh_tier_sec overstates the
-    # production tier's cost (recall values are unaffected either way)
+    # materialize the pair list once — without this the banding DAG
+    # re-executes through the verify stage's three references and
+    # lsh_tier_sec overstates the production tier's cost (recall values
+    # are unaffected either way)
     cand = cand.localCheckpoint(eager=False)
     lsh_pairs = jaccard_verify_pairs(exact_kept, cand, threshold=t_min).cache()
     n_lsh = lsh_pairs.count()
